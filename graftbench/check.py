@@ -13,38 +13,23 @@ The rows-only dedup ops and the load steps have property checks instead.
 import glob
 import hashlib
 import json
-import math
 import os
+import sys
 
 import duckdb
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-def canon(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(round(v, 9))
-    if isinstance(v, bool):
-        return str(v).lower()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    return str(v)
-
-
-def frame_key(cols, rows) -> list:
-    """Sorted canonical rows with columns ordered by name."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
+# the repository's local verifier holds the comparison rule
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                "tools"))
+try:
+    from localverify import TABLES, frame_key  # noqa: E402
+except ImportError:
+    sys.exit("graftbench: no tools/localverify.py; run from a full checkout")
 
 
 def digest(cols, rows) -> str:
     h = hashlib.sha256(json.dumps(sorted(cols)).encode())
-    for r in frame_key(cols, rows):
+    for r in frame_key(rows, cols):
         h.update(("\x1f".join(r) + "\x1e").encode())
     return h.hexdigest()
 
@@ -161,9 +146,19 @@ class Checker:
 
     def dedup_staged(self, out_dir: str) -> str:
         """q_dedup_staged: exact copies are collapsed to their smallest id
-        before MinHash, so only those representatives may appear."""
+        before MinHash, so only those representatives may appear; and every
+        planted near-copy or truncated copy whose shingle set has Jaccard
+        at least 0.9 with its source's must appear as a pair of their
+        representatives (at k = 64 and 16 bands, LSH misses such a pair
+        with probability below 1e-7)."""
         problems = self._pairs_problems(out_dir, 64, 0.5)
-        stray = self.con.execute(f"""
+        out = f"read_parquet('{out_dir}/*.parquet')"
+        kinds = os.path.join(self.data_dir, "kinds.parquet")
+        near = (f"""UNION ALL
+              SELECT c."text", s."text" FROM read_parquet('{kinds}') k
+                JOIN documents c ON c.doc_id = k.doc_id JOIN documents s ON s.doc_id = k.src_id
+              WHERE k.kind = 'near'""" if os.path.exists(kinds) else "")
+        n_out, stray, planted, missing = self.con.execute(f"""
             WITH corpus AS (
               SELECT doc_id, "text" FROM documents
               UNION ALL
@@ -171,12 +166,38 @@ class Checker:
               FROM documents WHERE doc_id % 20 = 0
               UNION ALL
               SELECT doc_id + 2000000, "text" FROM documents WHERE doc_id % 10 = 0),
-            reps AS (SELECT min(doc_id) AS doc_id FROM corpus GROUP BY "text"),
-            ids AS (SELECT doc_a AS doc_id FROM read_parquet('{out_dir}/*.parquet')
-                    UNION SELECT doc_b FROM read_parquet('{out_dir}/*.parquet'))
-            SELECT count(*) FROM ids WHERE doc_id NOT IN (SELECT doc_id FROM reps)""").fetchone()[0]
+            reps AS (SELECT "text", min(doc_id) AS doc_id FROM corpus GROUP BY "text"),
+            ids AS (SELECT doc_a AS doc_id FROM {out} UNION SELECT doc_b FROM {out}),
+            copies(ta, tb) AS (
+              SELECT substring("text", 1, greatest(length("text") - 30, 1)), "text"
+              FROM documents WHERE doc_id % 20 = 0
+              {near}),
+            toks AS (
+              SELECT least(ra.doc_id, rb.doc_id) AS doc_a, greatest(ra.doc_id, rb.doc_id) AS doc_b,
+                string_split(ta, ' ') AS a, string_split(tb, ' ') AS b
+              FROM copies JOIN reps ra ON ra."text" = ta JOIN reps rb ON rb."text" = tb
+              WHERE ra.doc_id <> rb.doc_id),
+            shingles AS (
+              SELECT DISTINCT doc_a, doc_b,
+                list_distinct(list_transform(range(1, len(a) - 1),
+                  i -> a[i] || ' ' || a[i + 1] || ' ' || a[i + 2])) AS sa,
+                list_distinct(list_transform(range(1, len(b) - 1),
+                  i -> b[i] || ' ' || b[i + 1] || ' ' || b[i + 2])) AS sb
+              FROM toks WHERE len(a) >= 3 AND len(b) >= 3),
+            close_pairs AS (
+              SELECT DISTINCT doc_a, doc_b FROM shingles
+              WHERE len(list_intersect(sa, sb)) >= 0.9 * len(list_distinct(sa || sb)))
+            SELECT (SELECT count(*) FROM {out}),
+              (SELECT count(*) FROM ids WHERE doc_id NOT IN (SELECT doc_id FROM reps)),
+              (SELECT count(*) FROM close_pairs),
+              (SELECT count(*) FROM close_pairs p LEFT JOIN {out} o
+                 ON o.doc_a = p.doc_a AND o.doc_b = p.doc_b WHERE o.doc_a IS NULL)""").fetchone()
+        if n_out == 0:
+            problems.append("no pairs")
         if stray:
             problems.append(f"{stray} ids that are not exact-copy representatives")
+        if missing:
+            problems.append(f"{missing} of {planted} planted copies with Jaccard >= 0.9 missing")
         return "; ".join(problems)
 
     def daily_partition(self, part_dir: str, day: str) -> str:
@@ -190,7 +211,7 @@ class Checker:
             return f"columns {sorted(cols)} != {sorted(want_cols)}"
         if len(rows) != len(want):
             return f"rows {len(rows)} != {len(want)}"
-        if frame_key(cols, rows) != frame_key(want_cols, want):
+        if frame_key(rows, cols) != frame_key(want, want_cols):
             return "values differ from the day filter"
         return ""
 
@@ -215,6 +236,6 @@ class Checker:
             return f"columns {sorted(cols)} != {sorted(want_cols)}"
         if len(rows) != len(want):
             return f"keys {len(rows)} != union of inputs {len(want)}"
-        if frame_key(cols, rows) != frame_key(want_cols, want):
+        if frame_key(rows, cols) != frame_key(want, want_cols):
             return "updated keys do not carry the update's values"
         return ""

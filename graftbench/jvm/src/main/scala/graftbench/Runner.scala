@@ -18,7 +18,7 @@ import graft.pipeline.Pipeline
   * measured to `<work>/result.json`; `run.py` checks the outputs and
   * prints the metrics.
   *
-  * Usage: Runner <workload> <dataDir> <workDir> <seconds> <trace 0|1>
+  * Usage: Runner <workload> <dataDir> <warmDataDir> <workDir> <seconds> <trace 0|1>
   *
   * The loop is closed with one client thread: each op starts when the
   * previous one has returned. Set-up runs first (see [[setup]]); the timed
@@ -27,7 +27,7 @@ import graft.pipeline.Pipeline
 object Runner {
 
   /** One op's record. `out` is the directory its output was written to. */
-  final case class OpRec(id: Int, name: String, pass: Int, wallS: Double,
+  final case class OpRec(id: Int, name: String, pass: Int, wallS: Double, cpuS: Double,
       error: String, out: String, day: String)
 
   final class Ctx(val spark: SparkSession, val data: String, val work: String,
@@ -51,6 +51,13 @@ object Runner {
   val corpusQueries: Seq[String] = Seq(
     "q_corpus_prep", "q_corpus_prep_bpe", "q_decontam", "q_text_quality",
     "q_dedup_minhash", "q_dedup_staged")
+  /** Stages of graft's recurring close that each build at most one
+    * substrate table: the ingest decide against the persisted signature
+    * index, the ranking over the bucketed trade-edge table, the two-batch
+    * ingest chain (its signature passes overlapped under `Par`) and the
+    * `Reconcile` table digest. etl_day runs them after its loads. */
+  val closeQueries: Seq[String] = Seq(
+    "q_ingest_decide", "q_pagerank", "q_dedup_ingest", "q_table_digest")
 
   /** Registered query: registry lookup, build, then the final action
     * (a parquet write of the result). */
@@ -93,7 +100,7 @@ object Runner {
   })
 
   def workload(name: String): Seq[Op] = name match {
-    case "etl_day" => extractLoad +: etlQueries.map(query) :+ upsertLoad
+    case "etl_day" => (extractLoad +: etlQueries.map(query) :+ upsertLoad) ++ closeQueries.map(query)
     case "corpus_prep" => corpusQueries.map(query)
     case other => throw new IllegalArgumentException(s"unknown workload $other")
   }
@@ -103,15 +110,16 @@ object Runner {
     * etl_day loads the keyed `user_last` table with the previous day, as
     * the deployed daily job finds it; its pass then runs cold, because the
     * daily job starts as a new process each day and its users wait for
-    * the JIT and codegen warm-up too.
+    * the JIT and codegen warm-up too. So do the close stages: a new
+    * process builds the substrate tables they read lazily, on first use.
     *
-    * corpus_prep runs one warm-up pass first: cold, its pass takes about
-    * three times a warm one, which would hide the per-row work this
-    * workload is here to measure. */
-  def setup(name: String, c: Ctx, runPass: Int => Double): Unit = name match {
+    * corpus_prep runs one warm-up pass first, over the small catalog
+    * tables in `warm`: cold, its pass takes about twice a warm one, which
+    * would hide the per-row work this workload is here to measure. */
+  def setup(name: String, c: Ctx, warm: Ctx, runPass: (Int, Ctx) => (Double, Double)): Unit = name match {
     case "etl_day" => upsertLoad.run(c, -1, dayOf(-1))
     case _ =>
-      runPass(-1)
+      runPass(-1, warm)
       rmTree(new File(s"${c.out}/p-1"))
   }
 
@@ -126,6 +134,13 @@ object Runner {
       src.listFiles().foreach(f => copyTree(f, new File(dst, f.getName)))
     } else Files.copy(src.toPath, dst.toPath)
 
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** CPU time of every thread of this process so far. Unlike wall time it
+    * excludes the time the host takes a virtual CPU away (steal). */
+  def cpuSeconds: Double = os.getProcessCpuTime / 1e9
+
   def gcSeconds: Double =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
 
@@ -138,14 +153,14 @@ object Runner {
   }.min
 
   def main(args: Array[String]): Unit = {
-    val Array(wName, data, work, secondsArg, traceArg) = args
+    val Array(wName, data, warmData, work, secondsArg, traceArg) = args
     val seconds = secondsArg.toDouble
     val tracer = new Tracer(traceArg == "1")
     val cores = Runtime.getRuntime.availableProcessors()
     Seq("out", "load", "tmp", "spark-local").foreach { d =>
       rmTree(new File(s"$work/$d")); new File(s"$work/$d").mkdirs()
     }
-    RelocatingLocalFs.root = s"$work/tmp"
+    require(RelocatingLocalFs.root == s"$work/tmp", "graftbench.tmp must name <work>/tmp")
 
     // graft.Bench's session settings at local[N]; the extra settings only
     // keep Spark's files inside the work directory
@@ -158,60 +173,82 @@ object Runner {
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", s"$work/spark-local")
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      .config("spark.hadoop.fs.file.impl", classOf[RelocatingLocalFs].getName)
-      .config("spark.hadoop.fs.file.impl.disable.cache", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    require(fs.isInstanceOf[RelocatingLocalFs], s"local file system is ${fs.getClass.getName}")
     val listener = new JobListener
-    if (tracer.enabled) spark.sparkContext.addSparkListener(listener)
+    val substrateWrites = new SubstrateWrites
+    if (tracer.enabled) {
+      spark.sparkContext.addSparkListener(listener)
+      spark.listenerManager.register(substrateWrites)
+    }
     val c = new Ctx(spark, data, work, tracer)
+    val warm = new Ctx(spark, warmData, work, tracer)
     val ops = workload(wName)
 
     val opRecs = mutable.ArrayBuffer.empty[OpRec]
     var nextOp = 0
-    def runPass(pass: Int): Double = {
+    /** Runs one pass; returns its wall and CPU seconds. */
+    def runPass(pass: Int, c: Ctx): (Double, Double) = {
       val day = dayOf(pass)
       val t0 = System.nanoTime()
+      val cpu0 = cpuSeconds
       ops.foreach { op =>
         val id = nextOp; nextOp += 1
         if (tracer.enabled) spark.sparkContext.setJobGroup(s"op$id", op.name)
         val s0 = System.nanoTime()
+        val c0 = cpuSeconds
         var out = ""
         val err =
           try { out = tracer.span(s"op:${op.name}", id)(op.run(c, pass, day)); "" }
           catch { case e: Throwable => s"${e.getClass.getName}: ${e.getMessage}".take(400) }
         val wall = (System.nanoTime() - s0) / 1e9
+        val cpu = cpuSeconds - c0
         if (tracer.enabled) spark.sparkContext.clearJobGroup()
         if (op eq upsertLoad) {
           if (err.isEmpty) copyTree(new File(out), new File(s"${c.out}/p$pass/load_upsert"))
           out = s"${c.out}/p$pass/load_upsert"
         }
-        opRecs += OpRec(id, op.name, pass, wall, err, out, day)
+        opRecs += OpRec(id, op.name, pass, wall, cpu, err, out, day)
         if (err.nonEmpty) System.err.println(s"[graftbench] ${op.name} pass $pass failed: $err")
       }
-      (System.nanoTime() - t0) / 1e9
+      ((System.nanoTime() - t0) / 1e9, cpuSeconds - cpu0)
     }
 
-    setup(wName, c, runPass)
+    setup(wName, c, warm, runPass)
     opRecs.clear()
     val setupS = (System.currentTimeMillis() -
       ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
+    val setupCpuS = cpuSeconds
 
     val gc0 = gcSeconds
     val passes = mutable.ArrayBuffer.empty[Double]
+    val passesCpu = mutable.ArrayBuffer.empty[Double]
     val timedT0 = System.nanoTime()
-    while (passes.isEmpty || (System.nanoTime() - timedT0) / 1e9 < seconds)
-      passes += runPass(passes.size)
+    while (passes.isEmpty || (System.nanoTime() - timedT0) / 1e9 < seconds) {
+      val (wall, cpu) = runPass(passes.size, c)
+      passes += wall
+      passesCpu += cpu
+    }
     val timedT1 = System.nanoTime()
     val gcS = gcSeconds - gc0
+    // the substrate tables under /tmp/graft_graph_* and /tmp/graft_ingestidx*
+    val substrateMb = Option(new File(s"$work/tmp").listFiles()).getOrElse(Array.empty[File])
+      .filter(f => f.getName.startsWith("graft_graph_") || f.getName.startsWith("graft_ingestidx"))
+      .map(dirMb).sum
+    val substrateS = substrateWrites.seconds
     val heapMb = heapAfterGcMb
 
     val res = new StringBuilder
-    res ++= s"""{"workload":"$wName","cores":$cores,"setup_s":$setupS,"setup_day":"${dayOf(-1)}","""
+    res ++= s"""{"workload":"$wName","cores":$cores,"setup_s":$setupS,"setup_cpu_s":$setupCpuS,"""
+    res ++= s""""setup_day":"${dayOf(-1)}","""
+    res ++= s""""substrate_s":$substrateS,"substrate_mb":$substrateMb,"""
     res ++= s""""heap_mb":$heapMb,"jvm_gc_s":$gcS,"timed_s":${(timedT1 - timedT0) / 1e9},"""
-    res ++= s""""passes":${passes.mkString("[", ",", "]")},"ops":["""
+    res ++= s""""passes":${passes.mkString("[", ",", "]")},"""
+    res ++= s""""passes_cpu":${passesCpu.mkString("[", ",", "]")},"ops":["""
     res ++= opRecs.map { r =>
-      s"""{"id":${r.id},"name":"${r.name}","pass":${r.pass},"wall_s":${r.wallS},""" +
+      s"""{"id":${r.id},"name":"${r.name}","pass":${r.pass},"wall_s":${r.wallS},"cpu_s":${r.cpuS},""" +
         s""""day":"${r.day}","out":${jstr(r.out)},"error":${jstr(r.error)}}"""
     }.mkString(",")
     res ++= "]"

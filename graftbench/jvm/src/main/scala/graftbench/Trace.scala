@@ -3,6 +3,8 @@ package graftbench
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One timed call the benchmark made into a layer. `op` ties a span to
   * the operation that caused it. */
@@ -38,9 +40,10 @@ final class Tracer(val enabled: Boolean) {
   def all: Seq[Span] = synchronized(spans.toList)
 }
 
-/** What the listener keeps of one Spark job. */
+/** What the listener keeps of one Spark job. `execId` is the SQL
+  * execution that started it, or -1. */
 final class JobRec(val id: Int, val group: String, val start: Long,
-    val stageIds: Seq[Int], val callSite: String, val name: String) {
+    val stageIds: Seq[Int], val callSite: String, val name: String, val execId: Long) {
   @volatile var end: Long = -1L
 }
 
@@ -59,15 +62,32 @@ final class JobListener extends SparkListener {
   val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
   val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRec]()
   val submittedStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  /** Call site of each SQL execution's root execution. Jobs that adaptive
+    * execution or a `Par` thread submits carry no program frame in their
+    * own call site; the execution that started them does. */
+  val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+  private val execRoot = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+
+  def execSite(execId: Long): String =
+    Option(execSites.get(execRoot.getOrDefault(execId, execId))).getOrElse("")
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+      execRoot.put(x.executionId, x.rootExecutionId.getOrElse(x.executionId))
+      execSites.put(x.executionId, x.details)
+    case _ =>
+  }
   private val failed = new java.util.concurrent.ConcurrentHashMap[(Int, Int), Integer]()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     val props = e.properties
     val group = Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
     val last = e.stageInfos.sortBy(_.stageId).lastOption
+    val execId = Option(props).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .map(_.toLong).getOrElse(-1L)
     jobs.put(e.jobId, new JobRec(e.jobId, group, nanos(e.time),
       e.stageInfos.map(_.stageId), last.map(_.details).getOrElse(""),
-      last.map(_.name).getOrElse("")))
+      last.map(_.name).getOrElse(""), execId))
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -94,4 +114,21 @@ final class JobListener extends SparkListener {
       if (m == null) 0.0 else m.shuffleWriteMetrics.bytesWritten / mb,
       if (m == null) 0.0 else (m.memoryBytesSpilled + m.diskBytesSpilled) / mb))
   }
+}
+
+/** Sums the time of the writes that create the program's substrate tables
+  * (`/tmp/graft_graph_*`, `/tmp/graft_ingestidx*`): the write actions of
+  * the registry's lazy substrate builders. */
+final class SubstrateWrites extends QueryExecutionListener {
+  private val nanos = new java.util.concurrent.atomic.AtomicLong()
+
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+    val plan = qe.analyzed.treeString(verbose = false)
+    if (plan.contains("/tmp/graft_graph_") || plan.contains("/tmp/graft_ingestidx"))
+      nanos.addAndGet(durationNs)
+  }
+
+  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+
+  def seconds: Double = nanos.get / 1e9
 }

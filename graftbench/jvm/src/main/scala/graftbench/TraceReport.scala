@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   *
   * Spark jobs become child spans of their op through the job group the
   * runner sets; a job is attributed to module M when M's source file is
-  * the innermost program frame of its call site. */
+  * the innermost program frame of its call site, or else of the call
+  * site of the SQL execution that started it. */
 object TraceReport {
 
   val modules: Seq[String] = Seq("Tables", "SparkEntry", "Etl", "Observability",
@@ -99,10 +100,11 @@ object TraceReport {
     m("spark.output_mb") = perOp(id => stageSum(id)(_.outputMb))
     m("spark.task_failures") = stages.map(_.failedTasks).sum
     m("spark.gc_s") = perOp(id => stageSum(id)(_.gcS))
-    m("trace.pass_s") = (t1 - t0) / 1e9 / passes
     m("trace.op_self_s") = if (opSelf.isEmpty) 0.0 else opSelf.sum / 1e9 / opSelf.size
+    val jobModule = jobs.map(j => j.id ->
+      moduleOf(j.callSite).orElse(moduleOf(l.execSite(j.execId)))).toMap
     for (mod <- modules) {
-      val mine = jobs.filter(j => moduleOf(j.callSite).contains(mod))
+      val mine = jobs.filter(j => jobModule(j.id).contains(mod))
       m(s"mod.$mod.jobs") = mine.size.toDouble / passes
       m(s"mod.$mod.job_s") = mine.map(j => (j.end - j.start) / 1e9).sum / passes
     }
@@ -115,7 +117,7 @@ object TraceReport {
     }
     jobs.sortBy(_.id).foreach { j =>
       add(s"""{"job":${j.id},"op":${j.group.drop(2)},"name":${Runner.jstr(j.name)},""" +
-        s""""module":${Runner.jstr(moduleOf(j.callSite).getOrElse(""))},""" +
+        s""""module":${Runner.jstr(jobModule(j.id).getOrElse(""))},""" +
         s""""start_ns":${j.start},"end_ns":${j.end},"stages":${j.stageIds.mkString("[", ",", "]")}}""")
     }
     sb ++= "]\n"

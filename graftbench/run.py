@@ -116,38 +116,40 @@ def build() -> None:
         fh.write(stamp)
 
 
-def data_for(workload: str, seed: int) -> str:
-    """Seeded inputs, generated once per seed and generator version."""
+def data_for(workload: str, seed: int) -> tuple:
+    """Seeded inputs, generated once per seed and generator version: the
+    workload's data directory, and the catalog tables its warm-up reads."""
     with open(os.path.join(BENCH, "gen.py"), "rb") as fh:
         h = hashlib.sha256(fh.read())
-    h.update(f"sf={SF} docs={CORPUS_DOCS} files={CORPUS_FILES}".encode())
-    version = h.hexdigest()[:12]
-    base = os.path.join(WORK, "data", f"{version}-seed{seed}")
-    if not os.path.exists(os.path.join(base, "tables", "events.parquet")):
-        gen.tables(os.path.join(base, "tables"), seed, SF)
+    h.update(f"docs={CORPUS_DOCS} files={CORPUS_FILES}".encode())
+    base = os.path.join(WORK, "data", f"{h.hexdigest()[:12]}-seed{seed}")
+    tables = os.path.join(base, f"tables-sf{SF}")
+    if not os.path.exists(os.path.join(tables, "events.parquet")):
+        gen.tables(tables, seed, SF)
     if workload != "corpus_prep":
-        return os.path.join(base, "tables")
+        return tables, tables
     corpus = os.path.join(base, "corpus")
     if not os.path.exists(os.path.join(corpus, "corpus.json")):
-        gen.corpus(os.path.join(base, "tables"), corpus, seed, CORPUS_DOCS, CORPUS_FILES)
+        gen.corpus(tables, corpus, seed, CORPUS_DOCS, CORPUS_FILES)
         problems = gen.check_corpus(corpus)
         if problems:
             shutil.rmtree(corpus)
             sys.exit(f"graftbench: generated corpus breaks its declared make-up: {problems}")
-    return corpus
+    return corpus, tables
 
 
-def run_jvm(workload: str, data: str, seconds: int, trace: int, deadline: float) -> dict:
+def run_jvm(workload: str, data: str, warm: str, seconds: int, trace: int,
+            deadline: float) -> dict:
     run_dir = os.path.join(WORK, "run")
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(os.path.join(run_dir, "jtmp"))
     cmd = (["java"]
            + [a for p in JDK_OPENS for a in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-Xmx3g", "-XX:ReservedCodeCacheSize=512m",
-              f"-Djava.io.tmpdir={run_dir}/jtmp",
+              f"-Djava.io.tmpdir={run_dir}/jtmp", f"-Dgraftbench.tmp={run_dir}/tmp",
               f"-Dlog4j2.configurationFile={JVM}/log4j2.properties",
-              "-cp", f"{CLASSES}:{spark_home()}/jars/*", "graftbench.Runner",
-              workload, data, run_dir, str(seconds), str(trace)])
+              "-cp", f"{JVM}/conf:{CLASSES}:{spark_home()}/jars/*", "graftbench.Runner",
+              workload, data, warm, run_dir, str(seconds), str(trace)])
     with open(os.path.join(run_dir, "jvm.log"), "w") as log:
         proc = subprocess.Popen(cmd, cwd=run_dir, stdout=log, stderr=subprocess.STDOUT)
         try:
@@ -207,12 +209,19 @@ def metrics_of(res: dict, trace: int) -> dict:
         layers["load.mb"] = dir_mb(os.path.join(run_dir, "load"))
         layers["jvm.gc_s"] = res["jvm_gc_s"] / len(res["passes"])
         layers["jvm.heap_after_gc_mb"] = res["heap_mb"]
+        layers["substrate.build_s"] = res["substrate_s"]
+        layers["substrate.mb"] = res["substrate_mb"]
+        layers["wall.setup_s"] = res["setup_s"]
+        layers["wall.pass_s"] = statistics.median(res["passes"])
+        layers["wall.op_p50_s"] = percentile([o["wall_s"] for o in res["ops"]], 0.5)
         return layers
+    # times are the process's CPU seconds, which leave out the time the
+    # host takes its virtual CPUs away; the traced run gives wall times
     return {
-        "setup_s": res["setup_s"],
-        "pass_s": statistics.median(res["passes"]),
-        "op_p50_s": percentile([o["wall_s"] for o in res["ops"]], 0.5),
-        # what the program leaves: load outputs and its /tmp tables
+        "setup_s": res["setup_cpu_s"],
+        "pass_cpu_s": statistics.median(res["passes_cpu"]),
+        "op_cpu_p50_s": percentile([o["cpu_s"] for o in res["ops"]], 0.5),
+        # what the program leaves: load outputs and its /tmp/graft_* tables
         "stored_mb": dir_mb(os.path.join(run_dir, "load")) + dir_mb(os.path.join(run_dir, "tmp")),
         "heap_mb": res["heap_mb"],
     }
@@ -229,9 +238,9 @@ def main(argv=None) -> int:
     t0 = time.time()
     build()
     t1 = time.time()
-    data = data_for(a.workload, a.seed)
+    data, warm = data_for(a.workload, a.seed)
     t2 = time.time()
-    res = run_jvm(a.workload, data, a.seconds, a.trace, t1 + DEADLINE_S)
+    res = run_jvm(a.workload, data, warm, a.seconds, a.trace, t1 + DEADLINE_S)
     t3 = time.time()
     checker = check.Checker(data, os.path.join(WORK, "oracle-cache"))
     verdicts = check_ops(res, checker)
@@ -244,15 +253,20 @@ def main(argv=None) -> int:
     if a.trace:
         with open(os.path.join(WORK, "run", "layers.json"), "w") as fh:
             json.dump(values, fh, indent=1)
-    names = [m["name"] for m in SPEC["per_layer" if a.trace else "end_to_end"]]
-    out = {
-        "correct": True,
+    print(json.dumps(result(verdicts, values, a.trace)))
+    return 0
+
+
+def result(verdicts: list, values: dict, trace: int) -> dict:
+    """The result line: the run is correct only when no op failed."""
+    failed = sum(1 for v in verdicts if v)
+    names = [m["name"] for m in SPEC["per_layer" if trace else "end_to_end"]]
+    return {
+        "correct": failed == 0,
         "attempted": len(verdicts),
-        "failed": sum(1 for v in verdicts if v),
+        "failed": failed,
         "metrics": {k: {"value": values[k], "unit": UNITS[k]} for k in names},
     }
-    print(json.dumps(out))
-    return 0
 
 
 if __name__ == "__main__":

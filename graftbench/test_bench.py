@@ -147,6 +147,14 @@ class FailureCounting(WithData):
         self.assertEqual(verdicts[1], "value digest differs")
         self.assertEqual(verdicts[2], "")
 
+    def test_any_failed_op_makes_the_run_incorrect(self):
+        values = {m["name"]: 1.0 for m in run.SPEC["end_to_end"]}
+        ok = run.result(["", ""], values, trace=0)
+        self.assertEqual((ok["correct"], ok["attempted"], ok["failed"]), (True, 2, 0))
+        bad = run.result(["", "threw java.lang.RuntimeException: boom", "value digest differs"],
+                         values, trace=0)
+        self.assertEqual((bad["correct"], bad["attempted"], bad["failed"]), (False, 3, 2))
+
     def test_unreadable_output_fails_its_op(self):
         c = self.checker("cache-missing")
         res = {"oracle_sql": {"q_a": "SELECT 1 AS x"},
@@ -164,6 +172,19 @@ class Corpus(unittest.TestCase):
         self.assertEqual(declared["exact"], 40)
         self.assertEqual(gen.check_corpus(out), [])
 
+    def test_staged_dedup_check_needs_the_planted_copies(self):
+        base = os.path.join(TMP, "corpus-base")
+        if not os.path.exists(os.path.join(base, "documents.parquet")):
+            gen.tables(base, seed=3, sf=0.002)
+        out = os.path.join(TMP, "corpus-staged")
+        gen.corpus(base, out, seed=3, n_docs=400, n_files=3)
+        c = check.Checker(out, os.path.join(TMP, "cache-staged"), threads=1)
+        empty = write_parquet("SELECT 1::BIGINT doc_a, 2::BIGINT doc_b, 1.0::DOUBLE est_sim LIMIT 0",
+                              os.path.join(TMP, "staged-empty"))
+        why = c.dedup_staged(empty)
+        self.assertIn("no pairs", why)
+        self.assertIn("planted copies with Jaccard >= 0.9 missing", why)
+
     def test_same_seed_same_bytes(self):
         a, b = os.path.join(TMP, "seed-a"), os.path.join(TMP, "seed-b")
         gen.tables(a, seed=9, sf=0.001)
@@ -175,7 +196,7 @@ class Corpus(unittest.TestCase):
 
 class Spec(unittest.TestCase):
     def test_every_end_to_end_metric_is_computed(self):
-        res = {"setup_s": 1.0, "passes": [2.0], "ops": [{"wall_s": 0.5}], "heap_mb": 3.0}
+        res = {"setup_cpu_s": 1.0, "passes_cpu": [2.0], "ops": [{"cpu_s": 0.5}], "heap_mb": 3.0}
         values = run.metrics_of(res, trace=0)
         self.assertEqual(sorted(values), sorted(m["name"] for m in run.SPEC["end_to_end"]))
 
